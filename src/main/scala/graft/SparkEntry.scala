@@ -156,42 +156,87 @@ object SparkEntry {
     "fast" -> ("fast", "ADJ"), "slow" -> ("slow", "ADJ"),
     "big" -> ("big", "ADJ"), "small" -> ("small", "ADJ"))
 
-  /** Materialized per-document term frequencies — the one aggregate the
-    * vocab/BOW/tf-idf tier derives everything from. The df branch and the
-    * bow branch form a plan diamond Catalyst cannot share (column pruning
-    * makes the two shuffles non-identical, so exchange reuse never fires —
-    * verified), so it is materialized explicitly: .persist() here, a
-    * checkpoint / Scale.resumableWrite at 100 TB. Spark's cache manager
-    * dedupes by canonical plan, so q14/q15/q16 share one materialization
-    * per session and the tokenize+explode subtree runs ONCE (round 1 ran
-    * it per branch — 3× the dominant narrow-stage cost). */
-  private val sharedTermCounts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  /** The session-artifact registry: every fitted model, shared
+    * intermediate and shared result frame the queries read is built ONCE
+    * per (session, sf dir, name) by [[shared]] and lives until
+    * [[releaseShared]]. A build may call [[shared]] for the artifacts it
+    * derives from: the map only installs a cell, and the build runs on the
+    * cell's first read, outside the map's bin lock.
+    *
+    * Each build picks one of three materializations: a frame `persist`ed
+    * at MEMORY_AND_DISK (one execution shared by several consumers), an
+    * eager `localCheckpoint` via [[checkpointed]] (the plan truncates to
+    * the materialized rows, so a deep composition is not re-analyzed by
+    * every consumer — round 7 measured ~2 s per warm q82/q77 call without
+    * it), or a plain driver value (fitted models, scalars). At 10^12 rows
+    * the frame boundaries become Scale.resumableWrite stages, which
+    * truncate the same way and add crash-resume.
+    *
+    * [[releaseShared]] drops the session's cells and frees every frame a
+    * built artifact holds — the value itself or a tuple's frame members —
+    * through [[graft.scale.Scale.free]]: cache entries are unpersisted,
+    * checkpoint RDDs dropped. Verify/Bench call it once their sweep is
+    * done; a long-lived session would otherwise keep every artifact. */
+  private final class Artifact(build: => Any) {
+    @volatile var built: Option[Any] = None
+    def value: Any = synchronized {
+      if (built.isEmpty) built = Some(build)
+      built.get
+    }
+  }
 
+  private val artifacts = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), Artifact]()
+
+  private def shared[A](s: SparkSession, dir: String, name: String)
+                       (build: => A): A =
+    artifacts.computeIfAbsent((s, dir, name), _ => new Artifact(build))
+      .value.asInstanceOf[A]
+
+  private def checkpointed(s: SparkSession, dir: String, name: String)
+                          (build: => DataFrame): DataFrame =
+    shared(s, dir, name)(build.localCheckpoint())
+
+  def releaseShared(s: SparkSession): Unit =
+    artifacts.entrySet.removeIf { e =>
+      val mine = e.getKey._1 eq s
+      if (mine) e.getValue.built.toSeq.flatMap {
+        case p: Product => p.productIterator
+        case v => Iterator(v)
+      }.foreach {
+        case df: org.apache.spark.sql.Dataset[_] => graft.scale.Scale.free(df)
+        case _ =>
+      }
+      mine
+    }
+
+  /** Per-document term frequencies — the one aggregate the vocab/BOW/
+    * tf-idf tier derives everything from. The df branch and the bow branch
+    * form a plan diamond Catalyst cannot share (column pruning makes the
+    * two shuffles non-identical, so exchange reuse never fires — verified),
+    * so it is persisted: q14/q15/q16 share one materialization per session
+    * and the tokenize+explode subtree runs ONCE (round 1 ran it per branch
+    * — 3× the dominant narrow-stage cost). */
   private def docTermCounts(s: SparkSession, dir: String): DataFrame =
-    sharedTermCounts.computeIfAbsent((s, dir), _ =>
+    shared(s, dir, "termCounts") {
       Vocab.termCounts(Vocab.tokensLong(docTokens(s, dir), "doc_id", "tokens"), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
-  /** ONE pruned dictionary per (session, sf) shared by the LDA and LSA
-    * tiers (same build params as the q14 dictionary): (vocab, nDocs,
-    * vocabSize). Round-3 review: each tier re-ran the documents count, the
-    * df-stats aggregation and the ranking window for byte-identical
-    * results. The vocab frame is small (keepN-capped) — nothing persisted. */
-  private val sharedVocab = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Long, Int)]()
-
+  /** ONE pruned dictionary shared by the LDA and LSA tiers (same build
+    * params as the q14 dictionary): (vocab, nDocs, vocabSize). Round-3
+    * review: each tier re-ran the documents count, the df-stats aggregation
+    * and the ranking window for byte-identical results. Checkpointed: the
+    * frame is keepN-capped (tiny), and the aggregation + ranking window
+    * behind it re-ran on every consumer (round-7). */
   private def vocabInfo(s: SparkSession, dir: String): (DataFrame, Long, Int) =
-    sharedVocab.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "vocab") {
       val tc = docTermCounts(s, dir)
       val n = t(s, dir, "documents").count()
-      // checkpoint: the pruned dictionary is keepN-capped (tiny), and the
-      // df-stats aggregation + ranking window behind it re-ran on every
-      // consumer (q14/q15/q16 plus the LDA/LSA tiers) — round-7
       val vocab = Vocab.buildFromCounts(tc, n, noBelow = 2, noAbove = 0.9)
         .localCheckpoint()
       (vocab, n, vocab.count().toInt)
-    })
+    }
 
   /** Per-doc sparse BOW vectors for the LDA tier (q52/q55/q56) — derived
     * from the shared term-count materialization and the shared dictionary. */
@@ -202,62 +247,48 @@ object SparkEntry {
       "doc_id", vocabSize)
   }
 
-  /** ONE fitted topic model per (session, sf) shared by the three
-    * LDA-derived queries — a user deriving topics, perplexity and the
-    * correlation heatmap fits once, exactly like the reference keeps one
-    * `LdaMulticore` object for all of its downstream reads. Fitting the
-    * same seeded model three times cost 25 s of the sf0.1 suite
-    * (measured); the features frame is persisted for the fit's iterative
-    * passes and released by [[releaseShared]]. */
-  private val sharedLda = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (org.apache.spark.ml.clustering.LDAModel, DataFrame)]()
-
+  /** ONE fitted topic model shared by the three LDA-derived queries — a
+    * user deriving topics, perplexity and the correlation heatmap fits
+    * once, exactly like the reference keeps one `LdaMulticore` object for
+    * all of its downstream reads. Fitting the same seeded model three
+    * times cost 25 s of the sf0.1 suite (measured); the features frame is
+    * persisted for the fit's iterative passes. */
   private def ldaFitted(s: SparkSession, dir: String)
       : (org.apache.spark.ml.clustering.LDAModel, DataFrame) =
-    sharedLda.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "lda") {
       val features = ldaFeatures(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (graft.ml.Lda.fit(features, k = 5), features)
-    })
+    }
 
-  /** ONE LSA fit per (session, sf) shared by q44 (the projection), q49 (PCA
-    * over it) and the q65/q66 model exports — the docs × k frame is tiny
-    * and the truncated SVD behind it is the expensive part. The cached V
-    * matrix is what the q44 replay oracle consumes via q65's export.
-    * Released by [[releaseShared]]. */
-  private val sharedLsa = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, org.apache.spark.mllib.linalg.Matrix)]()
-
+  /** ONE LSA fit shared by q44 (the projection), q49 (PCA over it) and the
+    * q65/q66 model exports — the docs × k frame is tiny and the truncated
+    * SVD behind it is the expensive part. The V matrix is what the q44
+    * replay oracle consumes via q65's export. Lsa persists the projection
+    * frame itself. */
   private def lsaModel(s: SparkSession, dir: String)
       : (DataFrame, org.apache.spark.mllib.linalg.Matrix) =
-    sharedLsa.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "lsa") {
       val (vocab, n, vocabSize) = vocabInfo(s, dir)
       val tfidf = Vocab.tfidfFromCounts(docTermCounts(s, dir), vocab, "doc_id", n)
-      // materialize = persist + release the internal vector-RDD cache;
-      // releaseShared unpersists the returned frame
-      graft.ml.Lsa.projectModel(tfidf, "doc_id", "tfidf", vocabSize, k = 5,
-        materialize = true)
-    })
+      graft.ml.Lsa.projectModel(tfidf, "doc_id", "tfidf", vocabSize, k = 5)
+    }
 
   private def lsaProjection(s: SparkSession, dir: String): DataFrame =
     lsaModel(s, dir)._1
 
-  /** ONE PCA fit per (session, sf) shared by q49 (the 2-D projection) and
-    * q65 (the exported component matrix q49's replay oracle reads) — the
-    * two MUST read the same fit, exactly the q60/q61 sharing contract. */
-  private val sharedPca = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.ml.feature.PCAModel]()
-
+  /** ONE PCA fit shared by q49 (the 2-D projection) and q65 (the exported
+    * component matrix q49's replay oracle reads) — the two MUST read the
+    * same fit, exactly the q60/q61 sharing contract. */
   private def pcaFitted(s: SparkSession, dir: String)
       : org.apache.spark.ml.feature.PCAModel =
-    sharedPca.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "pca") {
       import org.apache.spark.ml.feature.PCA
       import org.apache.spark.ml.functions.array_to_vector
       new PCA().setK(2).setInputCol("features").setOutputCol("pc")
         .fit(lsaProjection(s, dir)
           .withColumn("features", array_to_vector(col("projection"))))
-    })
+    }
 
   /** The full-precision PCA projection (doc_id, pc: Array[Double]) — ONE
     * spelling consumed by BOTH q49 (which emits it at FULL precision) and
@@ -274,98 +305,56 @@ object SparkEntry {
       .select(col("doc_id"), vector_to_array(col("pc")).as("pc"))
   }
 
-  /** ONE seeded KMeans fit per (session, sf) shared by q40 (assignments)
-    * and q50 (silhouette of the same clustering — evaluating a DIFFERENT
-    * fit than the one published would be wrong anyway). */
-  private val sharedKmeans = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (org.apache.spark.ml.clustering.KMeansModel, DataFrame)]()
-
+  /** ONE seeded KMeans fit shared by q40 (assignments) and q50 (silhouette
+    * of the same clustering — evaluating a DIFFERENT fit than the one
+    * published would be wrong anyway). */
   private def kmeansFitted(s: SparkSession, dir: String)
       : (org.apache.spark.ml.clustering.KMeansModel, DataFrame) =
-    sharedKmeans.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "kmeans") {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val emb = t(s, dir, "embeddings")
         .withColumn("features", array_to_vector(col("embedding")))
       (new KMeans().setK(10).setSeed(1L).setMaxIter(5)
         .setFeaturesCol("features").fit(emb), emb)
-    })
+    }
 
-  /** ONE seeded Word2Vec fit per (session, sf) shared by q60 (the word
-    * vectors) and q61 (document vectors by occurrence averaging) — q61's
-    * oracle replays the averaging from q60's export, so both MUST read the
-    * same model. */
-  private val sharedDoc2vec = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (org.apache.spark.ml.feature.Word2VecModel, DataFrame)]()
-
+  /** ONE seeded Word2Vec fit shared by q60 (the word vectors) and q61
+    * (document vectors by occurrence averaging) — q61's oracle replays the
+    * averaging from q60's export, so both MUST read the same model. */
   private def doc2vecFitted(s: SparkSession, dir: String)
       : (org.apache.spark.ml.feature.Word2VecModel, DataFrame) =
-    sharedDoc2vec.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "doc2vec") {
       // determinism normalization (doc_id order, bounded prefix, one
       // partition) lives inside Doc2Vec.fit — see its scaladoc for the
       // corpus-scale fence (round-4 ADVICE/VERDICT)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       (graft.ml.Doc2Vec.fit(docs, "doc_id", "tokens"), docs)
-    })
+    }
 
-  /** Unpersist the shared vocab-tier materialization for `s` — long-lived
-    * sessions would otherwise leak the cache entry (round-2 VERDICT
-    * hygiene). Verify/Bench call this once their query sweep is done. */
-  /** ONE persisted IVF quantizer per (session, sf), shared by q70/q72/q73
-    * — without it every ivfTopK consumer re-runs the quantizer build
-    * (Ann's scaladoc: the quantizer is a model artifact; build once,
-    * persist, reuse). Released in [[releaseShared]]. */
-  private val sharedIvfQuant = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
+  /** ONE persisted IVF quantizer shared by q70/q72/q73 — without it every
+    * ivfTopK consumer re-runs the quantizer build (Ann's scaladoc: the
+    * quantizer is a model artifact; build once, persist, reuse). */
   private def ivfQuantizerShared(s: SparkSession, dir: String): DataFrame =
-    sharedIvfQuant.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "ivfQuant") {
       val (model, emb) = kmeansFitted(s, dir)
       val clusters = model.transform(emb)
         .select(col("vec_id"), col("prediction").as("cluster"))
       Ann.ivfQuantizer(emb, "vec_id", "embedding", clusters).persist()
-    })
+    }
 
-  /** ONE persisted IVF corpus assignment per (session, sf) — the inverted
-    * lists (Ann.ivfAssign: every corpus row mapped to its nearest list).
-    * The assignment is nprobe-independent and is the corpus-sized scan of
-    * every IVF consumer: q70's top-k and all four q73 curve points ran it
-    * separately (5 corpus argmin scans per sweep) — it is a model artifact
-    * exactly like the quantizer it derives from (round-7). Released in
-    * [[releaseShared]] via the sharedResults map. */
+  /** ONE IVF corpus assignment — the inverted lists (Ann.ivfAssign: every
+    * corpus row mapped to its nearest list). The assignment is
+    * nprobe-independent and is the corpus-sized scan of every IVF
+    * consumer: q70's top-k and all four q73 curve points ran it separately
+    * (5 corpus argmin scans per sweep) — it is a model artifact exactly
+    * like the quantizer it derives from (round-7). */
   private def ivfAssignedShared(s: SparkSession, dir: String): DataFrame =
-    sharedResult(s, dir, "ivfAssigned") {
+    checkpointed(s, dir, "ivfAssigned") {
       val (_, emb) = kmeansFitted(s, dir)
       Ann.ivfAssign(emb, ivfQuantizerShared(s, dir), "vec_id", "embedding")
     }
-
-  /** ONE persisted result frame per (session, sf, name) for queries whose
-    * results other queries (or their own convergence checks) re-consume:
-    * the three ANN paths (q27 brute / q47 LSH / q70 IVF — q72's recall and
-    * q73's curve consume all three; without sharing, one Verify/Bench
-    * sweep re-ran the exact O(n·probes) corpus scan three times — round-5
-    * ADVICE) and the q77 component labels (the converged() fixpoint check
-    * re-reads them). The frames are tiny; what's saved is the corpus work
-    * behind each. Released in [[releaseShared]]. */
-  private val sharedResults = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Round-7: materialized via EAGER localCheckpoint, not persist().
-    * persist only dedupes execution — every consumer's QueryExecution
-    * still re-analyzes/re-optimizes the frame's full logical tree, and for
-    * the deep compositions (q82's staged chain, the CC labels) that
-    * driver-side walk cost ~2 s per warm invocation (measured; the q77
-    * plan-doubling lesson). The checkpoint truncates the logical plan to
-    * the materialized rows; releaseShared's unpersist stays harmless (the
-    * checkpoint RDDs die with the session). At 10^12 rows the equivalent
-    * boundary is a Scale.resumableWrite stage, which truncates the same
-    * way and adds crash-resume. */
-  private def sharedResult(s: SparkSession, dir: String, name: String)
-                          (build: => DataFrame): DataFrame =
-    sharedResults.computeIfAbsent((s, dir, name), _ => build.localCheckpoint())
 
   /** q74's quality-gated, exact-deduped intermediate, persisted so the
     * MinHash LSH self-join and the final anti-join read ONE materialization
@@ -373,27 +362,13 @@ object SparkEntry {
     * branch — the round-5 VERDICT #1 plan bug: the lazy composition's
     * physical plan rescanned the documents corpus ~9× (correct, gated, and
     * NOT the plan you'd run at 100 TB, where it means ~6 full corpus
-    * quality scans inside one job). This is the single-job spelling (the
-    * docTermCounts pattern); the production shape at 10^12 rows stages this
-    * frame through Scale.resumableWrite between pipeline stages instead —
-    * exactly where the reference materializes its corpus between stages
-    * (reference: src/doc_classification.py:492-494). Released in
-    * [[releaseShared]]. */
-  private val sharedCurated = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
-  /** q55's two verification scalars per (session, sf): the reported
-    * log-perplexity (an MLlib pass over the features) and the plugin
-    * cross-entropy (the bow × theta × phi mix aggregation). Both verify
-    * the ONE shared LDA fit, so a session computes them once — re-running
-    * both full passes on every q55 invocation re-verified the same cached
-    * model (round-7; the vocabInfo count-cache pattern). Entries drop in
-    * [[releaseShared]]. */
-  private val sharedQ55Stats = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Double, Double)]()
-
+    * quality scans inside one job). This is the single-job spelling; the
+    * production shape at 10^12 rows stages this frame through
+    * Scale.resumableWrite between pipeline stages instead — exactly where
+    * the reference materializes its corpus between stages (reference:
+    * src/doc_classification.py:492-494). */
   private def curatedUnique(s: SparkSession, dir: String): DataFrame =
-    sharedCurated.computeIfAbsent((s, dir), _ => {
+    shared(s, dir, "curated") {
       val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // quality is ALSO persisted: Dedup.exact's keeper join-back plus the
       // semi join re-derive it three times otherwise, and each re-derivation
@@ -408,42 +383,7 @@ object SparkEntry {
       val keepers = graft.dedup.Dedup.exact(quality, "doc_id", "text")
         .filter(col("keep")).select("doc_id")
       (quality.join(keepers, Seq("doc_id"), "left_semi").persist(mem), quality)
-    })._1
-
-  /** Drop this session's entries from one shared cache, running `clean`
-    * on each evicted value (round-7: nine copy-pasted iterator loops
-    * collapsed — every new shared cache was one missed copy away from a
-    * session leak). Checkpointed frames (the sharedResult tier) have no
-    * cache entry to unpersist — their RDD blocks are released by the
-    * ContextCleaner / session stop; the unpersist stays for the persisted
-    * tiers. */
-  private def releaseEntries[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V], s: SparkSession)(
-      clean: V => Unit): Unit = {
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.productElement(0).asInstanceOf[AnyRef] eq s) {
-        clean(e.getValue); it.remove()
-      }
-    }
-  }
-
-  def releaseShared(s: SparkSession): Unit = {
-    releaseEntries(sharedResults, s)(_.unpersist(): Unit)
-    releaseEntries(sharedCurated, s) { v =>
-      v._1.unpersist(); v._2.unpersist(): Unit
-    }
-    releaseEntries(sharedIvfQuant, s)(_.unpersist(): Unit)
-    releaseEntries(sharedTermCounts, s)(_.unpersist(): Unit)
-    releaseEntries(sharedLda, s)(_._2.unpersist(): Unit)
-    releaseEntries(sharedLsa, s)(_._1.unpersist(): Unit)
-    releaseEntries(sharedPca, s)(_ => ())
-    releaseEntries(sharedKmeans, s)(_ => ())
-    releaseEntries(sharedVocab, s)(_ => ())
-    releaseEntries(sharedQ55Stats, s)(_ => ())
-    releaseEntries(sharedDoc2vec, s)(_ => ())
-  }
+    }._1
 
   /** Oracle-side content chunks of a documents-derived turn: the scored
     * kernel's content-candidate blocks are the layout 8-token lines for
@@ -685,10 +625,10 @@ object SparkEntry {
         .groupBy("route").agg(count(lit(1)).as("n"))),
 
     // text analysis: token counts + quality + language guess. ONE tokenize
-    // (round-7): wsTokenCount re-split the raw text while langId split the
-    // lowercased text — whitespace positions are identical under lower()
-    // and empty-token filtering is case-blind, so size(shared tokens) is
-    // the same count and the second interpreted split+filter pass is gone.
+    // (round-7): a separate whitespace count re-split the raw text while
+    // langId split the lowercased text — whitespace positions are identical
+    // under lower() and empty-token filtering is case-blind, so size(shared
+    // tokens) is the same count and the second split+filter pass is gone.
     "q19_textstats" -> ((s, dir) => t(s, dir, "documents")
       .select(col("doc_id"), col("text"),
         Normalize.tokenize(lower(col("text"))).as("toks"))
@@ -752,7 +692,7 @@ object SparkEntry {
     // T2/M9 — brute-force cosine top-k for a small probe set. Shared
     // persisted result: q72's recall and q73's curve both consume the exact
     // top-k, and each re-run was a full corpus scan (round-5 ADVICE).
-    "q27_ann_topk" -> ((s, dir) => sharedResult(s, dir, "brute") {
+    "q27_ann_topk" -> ((s, dir) => checkpointed(s, dir, "brute") {
       val emb = t(s, dir, "embeddings")
       Ann.bruteTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding", 5)
     }),
@@ -899,21 +839,15 @@ object SparkEntry {
     // 10 lists) — the round-5 VERDICT #5 fix: the old explicit nprobe=3
     // gave a 20–47% recall ANN with no warning; the default path under the
     // gate now reads ≥80% recall at every sf (q72 checks the number).
-    "q70_ann_ivf" -> ((s, dir) => {
-      // resolve the shared frames BEFORE entering this query's own
-      // sharedResult builder — computeIfAbsent re-entered on the same map
-      // throws "Recursive update"
-      val assigned = ivfAssignedShared(s, dir)
-      val quant = ivfQuantizerShared(s, dir)
-      sharedResult(s, dir, "ivf") {
-        val (_, emb) = kmeansFitted(s, dir)
-        // the oracle replays exactly 8 probed lists (pr <= 8) — fail LOUDLY
-        // if the sizing rule ever drifts (round-3 ADVICE class)
-        require(Ann.nprobeFor(10) == 8,
-          s"q70 oracle is pinned to nprobe=8, nprobeFor(10) gave ${Ann.nprobeFor(10)}")
-        Ann.ivfTopKAssigned(assigned, emb.filter(col("vec_id") < 3), quant,
-          "vec_id", "embedding", k = 5)
-      }
+    "q70_ann_ivf" -> ((s, dir) => checkpointed(s, dir, "ivf") {
+      val (_, emb) = kmeansFitted(s, dir)
+      // the oracle replays exactly 8 probed lists (pr <= 8) — fail LOUDLY
+      // if the sizing rule ever drifts (round-3 ADVICE class)
+      require(Ann.nprobeFor(10) == 8,
+        s"q70 oracle is pinned to nprobe=8, nprobeFor(10) gave ${Ann.nprobeFor(10)}")
+      Ann.ivfTopKAssigned(ivfAssignedShared(s, dir),
+        emb.filter(col("vec_id") < 3), ivfQuantizerShared(s, dir),
+        "vec_id", "embedding", k = 5)
     }),
 
     // REAL resize under the gate: the payload itself is rewritten (ImageIO
@@ -958,23 +892,19 @@ object SparkEntry {
     // self-join and the final anti-join read one InMemoryRelation, so the
     // plan scans `documents` ONCE (was ~9 Scan parquet leaves; at 100 TB
     // that was ~6 full corpus quality scans inside one job).
-    "q74_curation" -> ((s, dir) => {
-      // resolve the curation intermediate BEFORE the sharedResult builder
-      // (computeIfAbsent must not re-enter its own map)
+    // The survivor set itself is a shared frame (round-7): q82 re-reads it
+    // as its base, and the bench's warm tier already prices shared-frame
+    // owners by the cold pass — re-running the MinHash self-join +
+    // anti-join per consumer rebuilt the same tiny frame.
+    "q74_curation" -> ((s, dir) => checkpointed(s, dir, "q74survivors") {
       val unique = curatedUnique(s, dir)
-      // the survivor set itself is a shared persisted frame (round-7): q82
-      // re-reads it as its base, and the bench's warm tier already prices
-      // shared-frame owners by the cold pass — re-running the MinHash
-      // self-join + anti-join per consumer rebuilt the same tiny frame.
-      sharedResult(s, dir, "q74survivors") {
-        val nearDropped = graft.dedup.Dedup.minhashLshMd5(
-            unique.select(col("doc_id"), split(col("text"), " ").as("tokens")),
-            "doc_id", "tokens", k = 3, numHashes = 16, bands = 4)
-          .filter(col("est_jaccard") >= 0.5)
-          .select(col("key_b").as("doc_id")).distinct()
-        unique.join(nearDropped, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("quality_ppm"))
-      }
+      val nearDropped = graft.dedup.Dedup.minhashLshMd5(
+          unique.select(col("doc_id"), split(col("text"), " ").as("tokens")),
+          "doc_id", "tokens", k = 3, numHashes = 16, bands = 4)
+        .filter(col("est_jaccard") >= 0.5)
+        .select(col("key_b").as("doc_id")).distinct()
+      unique.join(nearDropped, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("quality_ppm"))
     }),
 
     // The IVF nprobe→recall curve — the tradeoff a deployment tunes: mean
@@ -1124,16 +1054,15 @@ object SparkEntry {
     // where production swaps in large-star/small-star), while 0.4 keeps a
     // real transitive graph (197 edges, 5 rounds, 2000→1803 components at
     // sf0.1) inside a 6-round unroll the oracle can replay.
-    "q77_dup_components" -> ((s, dir) => sharedResult(s, dir, "cc") {
+    // Shared, not re-checkpointed: connectedComponents returns the last
+    // round's eager localCheckpoint — already materialized for the
+    // fixpoint re-read, and freed by releaseShared like any checkpoint.
+    "q77_dup_components" -> ((s, dir) => shared(s, dir, "cc") {
       val emb = t(s, dir, "embeddings")
       val edges = Dedup.embeddingDupLsh(emb, "vec_id", "embedding",
           threshold = 0.4, dim = 64, bits = 4)
         .select(col("key_a").as("src"), col("key_b").as("dst"))
         .persist()
-      // no extra persist: connectedComponents returns the last round's
-      // eagerly checkpointed frame — already materialized for the fixpoint
-      // re-read (a persist here left a session-lifetime cache entry
-      // releaseShared could no longer reach; round-7 review finding)
       val labels = Dedup.connectedComponents(
         emb.select(col("vec_id")), "vec_id", edges, iters = CcIters)
       require(Dedup.converged(labels, "vec_id", edges),
@@ -1244,15 +1173,15 @@ object SparkEntry {
 
     // THE FULL CORPUS BUILD — every curation stage composed into the one
     // job a pretraining run actually ships: q74's survivors (quality gate →
-    // exact dedup → MinHash near-dup prune, reused as the shared persisted
-    // frame) → benchmark decontamination (q80's broadcast shingle probe,
+    // exact dedup → MinHash near-dup prune, reused as the shared frame) →
+    // benchmark decontamination (q80's broadcast shingle probe,
     // here as an anti-join) → balanced-lang mixture sampling (q81's rate
     // filter, rates over the CLEAN set) → GPT-style sequence packing
     // (q78's distributed prefix sum) into 256-token blocks. The oracle
     // replays the tail from q74's own gated export (the __VERIFY_OUT__
     // cross-read pattern), so every stage boundary is pinned twice: once
     // by its standalone gate, once inside the composition.
-    // Stage boundaries are PERSISTED shared frames (the q74 discipline —
+    // Stage boundaries are CHECKPOINTED shared frames (the q74 discipline —
     // without them the lazy composition re-evaluates the whole upstream
     // subtree on every reference and the plan reads `documents` ~25×):
     // `base` is consumed by both the corpus-shingle probe and the
@@ -1260,17 +1189,18 @@ object SparkEntry {
     // `counts` by both prefix-sum passes. With all three staged the job
     // touches parquet twice (base build + benchmark shingles). At 10^12
     // rows each boundary is a Scale.resumableWrite checkpoint instead.
-    "q82_corpus_build" -> ((s, dir) => {
-      // resolve q74's shared survivor frame BEFORE entering this query's
-      // own sharedResult builders (computeIfAbsent must not re-enter)
-      val survivors = queries("q74_curation")(s, dir)
-      val base = sharedResult(s, dir, "q82_base") {
-        survivors.select("doc_id")
+    // The block map itself is the shared frame of record (round-7): the
+    // corpus build is a once-per-session artifact and the bench's warm
+    // tier prices shared-frame owners (q82 among them, per the audit's
+    // query_stat) by their cold pass.
+    "q82_corpus_build" -> ((s, dir) => checkpointed(s, dir, "q82_result") {
+      val base = checkpointed(s, dir, "q82_base") {
+        queries("q74_curation")(s, dir).select("doc_id")
           .join(t(s, dir, "documents"), Seq("doc_id"))
           .select(col("doc_id"), col("text"), col("lang"),
             split(col("text"), " ").as("tokens"))
       }
-      val clean = sharedResult(s, dir, "q82_clean") {
+      val clean = checkpointed(s, dir, "q82_clean") {
         val bench = t(s, dir, "documents")
           .filter(col("doc_id") % 97 === 0)
           .select(split(col("text"), " ").as("tokens"))
@@ -1281,20 +1211,14 @@ object SparkEntry {
       }
       val kept = graft.corpus.Curation.sampleToBalanced(
         clean.select(col("doc_id"), col("lang")), "doc_id", "lang")
-      val counts = sharedResult(s, dir, "q82_counts") {
+      val counts = checkpointed(s, dir, "q82_counts") {
         graft.corpus.Packing.tokenCounts(
           clean.join(kept.select("doc_id"), Seq("doc_id"))
             .select(col("doc_id"), col("text")),
           "doc_id", "text", bucketSize = 128L)
       }
-      // the block map itself is the shared frame of record (round-7): the
-      // corpus build is a once-per-session artifact and the bench's warm
-      // tier prices shared-frame owners (q82 among them, per the audit's
-      // query_stat) by their cold pass
-      sharedResult(s, dir, "q82_result") {
-        graft.corpus.Packing.packSpansFromCounts(counts, "doc_id",
-          blockTokens = 256)
-      }
+      graft.corpus.Packing.packSpansFromCounts(counts, "doc_id",
+        blockTokens = 256)
     }),
 
     // SimHash near-dup — md5-portable 32-bit signature so DuckDB replays it;
@@ -1313,7 +1237,7 @@ object SparkEntry {
     // persisted result (round-7): q62 writes THIS product through the CSV
     // sink, so without sharing every q62 run re-ran the whole join/rollup
     // chain just to re-derive the same 25 rows.
-    "q41_data_product" -> ((s, dir) => sharedResult(s, dir, "q41product") {
+    "q41_data_product" -> ((s, dir) => checkpointed(s, dir, "q41product") {
       val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
       val n = t(s, dir, "nation")
       val observed = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
@@ -1452,7 +1376,7 @@ object SparkEntry {
     // sign-pattern, probes also visit every Hamming-1 bucket, same-bucket
     // pairs score, dedup, window top-k. Round-2 VERDICT #5: the 100 TB ANN
     // path ran spec-only — now driver-gated end to end.
-    "q47_ann_lsh" -> ((s, dir) => sharedResult(s, dir, "lsh") {
+    "q47_ann_lsh" -> ((s, dir) => checkpointed(s, dir, "lsh") {
       val emb = t(s, dir, "embeddings")
       val bits = Ann.bitsFor(emb.count()) // 4 for every testdata sf (n ≤ 4096)
       // the oracle replays exactly 4 hyperplanes (generate_series(0,3)) —
@@ -1543,7 +1467,7 @@ object SparkEntry {
     // the fit — and q55 (theta for the plugin bracket) and q56 (the corr
     // matrix over the SAME 6dp weights) both re-ran it. One frame serves
     // all three, exactly like the fit itself is shared via ldaFitted.
-    "q52_lda" -> ((s, dir) => sharedResult(s, dir, "ldaDocTopics") {
+    "q52_lda" -> ((s, dir) => checkpointed(s, dir, "ldaDocTopics") {
       val (model, features) = ldaFitted(s, dir)
       graft.ml.Lda.docTopicMatrix(model, features, "doc_id")
     }),
@@ -1658,15 +1582,14 @@ object SparkEntry {
       val phiRows = (for { tpc <- 0 until k; w <- 0 until vocabSize }
         yield ("phi", tpc.toLong, w, tm(w, tpc) / colSum(tpc)))
         .toDF("part", "i", "j", "value")
-      // q52's shared doc-topic frame — same model, same transform (round-7:
-      // the second of three LDA transforms this suite used to run). Resolved
-      // BEFORE the scalar cache below in case a cold session enters here.
-      val theta = queries("q52_lda")(s, dir)
-        .select(col("doc_id"), col("topic"), col("weight"))
       // the two verification scalars — the MLlib perplexity pass and the
       // plugin-CE mix aggregation — verify the ONE shared fit; computed once
       // per (session, sf) (round-7; both were full passes per invocation)
-      val (lp, plugin) = sharedQ55Stats.computeIfAbsent((s, dir), _ => {
+      val (lp, plugin) = shared(s, dir, "q55stats") {
+        // q52's shared doc-topic frame — same model, same transform
+        // (round-7: the second of three LDA transforms this suite ran)
+        val theta = queries("q52_lda")(s, dir)
+          .select(col("doc_id"), col("topic"), col("weight"))
         val lp0 =
           math.rint(graft.ml.Lda.logPerplexity(model, features) * 1e4) / 1e4
         val bow = Vocab.bowFromCounts(docTermCounts(s, dir), vocab, "doc_id")
@@ -1681,7 +1604,7 @@ object SparkEntry {
           .agg((-sum(col("cnt") * log(col("m"))) / sum(col("cnt"))).as("p"))
           .head()
         (lp0, p)
-      })
+      }
       val upper = math.log(vocabSize.toDouble) + Q55UpperMargin
       require(lp - plugin > 1e-6 && upper - lp > 1e-6,
         s"q55 perplexity bracket violated (or boundary-grazing): " +

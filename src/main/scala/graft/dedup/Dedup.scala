@@ -382,14 +382,18 @@ object Dedup {
     * truncation per round is the standard production shape for iterative
     * graph passes (GraphX does the same internally); at 10^12 edges swap
     * the localCheckpoint for a Scale.resumableWrite stage boundary, which
-    * adds crash-resume on top of the same truncation. */
+    * adds crash-resume on top of the same truncation. Round r−1's blocks
+    * are freed once round r has materialized (its checkpoint no longer
+    * reads them), so only the returned round stays cached. */
   def connectedComponents(nodes: DataFrame, key: String, edges: DataFrame,
                           iters: Int): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
     var labels = nodes.select(col(key), col(key).as("component"))
     (1 to iters).foreach { _ =>
-      labels = ccRound(labels, key, sym).localCheckpoint()
+      val prev = labels
+      labels = ccRound(prev, key, sym).localCheckpoint()
+      graft.scale.Scale.free(prev)
     }
     labels
   }

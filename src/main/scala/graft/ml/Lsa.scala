@@ -25,16 +25,14 @@ object Lsa {
     * L2-normalized. `vocabSize` = dictionary size (ids are 0-based dense by
     * Vocab.build's construction).
     *
-    * `materialize = true` persists and computes the projection frame, then
-    * releases the internal sparse-vector RDD cache immediately — the
+    * The projection frame comes back persisted and computed, and the
+    * internal sparse-vector RDD cache is released immediately — the
     * returned frame no longer depends on it, so a long-lived session holds
-    * one docs×k cache instead of a leaked corpus-sized vector RDD (callers
-    * unpersist the returned frame when done). With `materialize = false`
-    * the vector RDD must stay cached for the lazy projection and is
-    * reclaimed only when the frame is garbage-collected. */
+    * one docs×k cache instead of a corpus-sized vector RDD (callers
+    * unpersist the returned frame when done). */
   def project(tfidf: DataFrame, docKey: String, valueCol: String,
-              vocabSize: Int, k: Int, materialize: Boolean = false): DataFrame =
-    projectModel(tfidf, docKey, valueCol, vocabSize, k, materialize)._1
+              vocabSize: Int, k: Int): DataFrame =
+    projectModel(tfidf, docKey, valueCol, vocabSize, k)._1
 
   /** [[project]] plus the fitted right-singular-vector matrix V (vocabSize ×
     * kEff) the projection is `tfidf · V` of. Exposing V is what makes the
@@ -44,7 +42,7 @@ object Lsa {
     * applied to the linear algebra downstream consumers read). V is local
     * by the same scale argument as the broadcast: vocab is keepN-capped. */
   def projectModel(tfidf: DataFrame, docKey: String, valueCol: String,
-              vocabSize: Int, k: Int, materialize: Boolean = false)
+              vocabSize: Int, k: Int)
       : (DataFrame, org.apache.spark.mllib.linalg.Matrix) = {
     val spark = tfidf.sparkSession
     import spark.implicits._
@@ -59,9 +57,8 @@ object Lsa {
           ps.map(_._2).toArray))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // computeSVD is an action — it materializes the persisted docVecs, and
-    // the lazy projection map below re-reads them from cache at query time
-    // (do NOT unpersist here: the returned frame still depends on it).
+    // computeSVD is an action — it materializes the persisted docVecs,
+    // which the projection map below re-reads until it is itself cached.
     val svd = new RowMatrix(docVecs.values).computeSVD(k, computeU = false)
     // ARPACK may converge fewer than k singular vectors on a corpus whose
     // numerical rank is below k — indexing V past its real column count
@@ -78,15 +75,9 @@ object Lsa {
       }
       val n = math.sqrt(proj.map(p => p * p).sum)
       (doc, if (n == 0.0) proj.toSeq else proj.map(_ / n).toSeq)
-    }.toDF(docKey, "projection")
-    val frame =
-      if (!materialize) out
-      else {
-        val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.count()
-        docVecs.unpersist()
-        cached
-      }
-    (frame, svd.V)
+    }.toDF(docKey, "projection").persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    docVecs.unpersist()
+    (out, svd.V)
   }
 }

@@ -1,6 +1,7 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, salted
@@ -39,6 +40,17 @@ object Scale {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Free a materialized frame's blocks. An eager `localCheckpoint` frame
+    * is a bare `LogicalRDD` whose checkpoint RDD holds the rows — the
+    * cache manager never sees it, so that RDD is unpersisted directly;
+    * any other frame leaves through the cache manager (a no-op when it was
+    * never persisted). Only call this once nothing reads the frame again:
+    * a local checkpoint has no lineage to recompute lost blocks from. */
+  private[graft] def free(ds: Dataset[_]): Unit = ds.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+    case _ => ds.unpersist(): Unit
+  }
 
   // ---------------------------------------------------------------- manifest
 

@@ -237,4 +237,22 @@ class DedupSpec extends AnyFunSuite {
     assert(early.as[(Long, Long)].collect().toMap.apply(4L) === 3L)
     assert(!Dedup.converged(early, "doc_id", edges))
   }
+
+  test("connectedComponents frees every round but the returned one") {
+    val sc = spark.sparkContext
+    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L).toDF("doc_id")
+    val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (10L, 11L)).toDF("src", "dst")
+    val before = sc.getPersistentRDDs.keySet
+    val got = Dedup.connectedComponents(nodes, "doc_id", edges, iters = 4)
+    val left = sc.getPersistentRDDs.keySet -- before
+    val returned = got.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(left === Set(returned))
+    // the returned round still reads after its predecessors were freed
+    assert(got.as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    graft.scale.Scale.free(got)
+    assert(!sc.getPersistentRDDs.contains(returned))
+  }
 }
