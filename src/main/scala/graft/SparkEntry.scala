@@ -1015,17 +1015,27 @@ object SparkEntry {
       // dir is keyed by a 2^30 hash, so a collision between two sf dirs in
       // one process (or a different dir mapping to the same bucket) must
       // re-stage rather than silently stream the wrong corpus (round-7
-      // review finding)
+      // review finding) — plus the documents files' total length and
+      // newest mtime, so a fixture regenerated under the same path
+      // re-stages too
+      val docFiles = {
+        val (f, p) = graft.scale.Scale.fs(s, s"$dir/documents.parquet")
+        val it = f.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      }
+      val fingerprint = s"$dir\n${docFiles.map(_.getLen).sum}\n" +
+        docFiles.map(_.getModificationTime).maxOption.getOrElse(0L)
       val stamp = new java.io.File(base, "in_stamp")
       val stampOk = stamp.exists &&
         new String(java.nio.file.Files.readAllBytes(stamp.toPath),
-          java.nio.charset.StandardCharsets.UTF_8) == dir
+          java.nio.charset.StandardCharsets.UTF_8) == fingerprint
       if (!stampOk || !new java.io.File(s"$inDir/_SUCCESS").exists) {
         deleteRecursively(new java.io.File(inDir))
         Transcripts.fromDocuments(s, dir)
           .write.mode("overwrite").parquet(inDir)
         java.nio.file.Files.write(stamp.toPath,
-          dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         ()
       }
       val run = s"$base/${System.nanoTime()}"

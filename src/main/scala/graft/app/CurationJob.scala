@@ -64,15 +64,8 @@ object CurationJob {
     * (published snapshot, block-map rows written). */
   def run(spark: SparkSession, in: String, table: String, nBuckets: Int,
           waves: Int = 1, blockTokens: Int = 256): (String, Long) = {
-    val params = s"nBuckets=$nBuckets\nblockTokens=$blockTokens"
-    val current = TableIO.currentSnapshot(spark, table)
-    val snap = TableIO.snapshots(spark, table)
-      .filter(s => current.forall(c => TableIO.snapNum(c) < TableIO.snapNum(s)))
-      .lastOption
-      .filter(s => TableIO.readSidecar(spark, table, s, "params")
-        .contains(params))
-      .getOrElse(TableIO.nextSnapshotName(spark, table))
-    TableIO.writeSidecar(spark, table, snap, "params", params)
+    val snap = TableIO.stage(spark, table,
+      s"nBuckets=$nBuckets\nblockTokens=$blockTokens")
 
     // ---- stage 1: quality → exact dedup → near-dup prune → decontaminate.
     // One resumable boundary for the whole narrow chain: every step is a
@@ -80,35 +73,32 @@ object CurationJob {
     // survivor set, so there is nothing worth checkpointing between them —
     // the expensive thing to never redo is the full-corpus scan they share.
     val cleanDir = s"$table/$snap/stage_clean"
-    if (Scale.completedBuckets(spark, s"$cleanDir/manifest").size < nBuckets) {
-      val docs = spark.read.parquet(in)
-      val quality = docs.select(col("doc_id"), col("text"), col("lang"),
-          graft.textstats.TextStatsExprs.qualityScorePpm(col("text"),
-            graft.text.Normalize.DefaultStops).as("quality_ppm"))
-        .filter(col("quality_ppm") >= 650000L)
-      val keepers = Dedup.exact(quality, "doc_id", "text")
-        .filter(col("keep")).select("doc_id")
-      val unique = quality.join(keepers, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("text"), col("lang"),
-          split(col("text"), " ").as("tokens"))
-        .persist() // within-stage reuse (LSH self-join sides + anti-joins)
-      val nearDropped = Dedup.minhashLshMd5(
-          unique.select(col("doc_id"), col("tokens")),
-          "doc_id", "tokens", k = 3, numHashes = 16, bands = 4)
-        .filter(col("est_jaccard") >= 0.5)
-        .select(col("key_b").as("doc_id")).distinct()
-      val surv = unique.join(nearDropped, Seq("doc_id"), "left_anti")
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-        .select(split(col("text"), " ").as("tokens"))
-      val contam = Curation.contaminated(surv, bench, "doc_id", "tokens",
-        k = 4).select("doc_id")
-      val clean = surv.join(contam, Seq("doc_id"), "left_anti")
-        .select("doc_id", "text", "lang")
-      Scale.resumableWrite(clean, s"$cleanDir/data", s"$cleanDir/manifest",
-        nBuckets, waves, salts = 1, keyCol = "doc_id", orderCol = "doc_id")
-      unique.unpersist()
-      ()
-    }
+    val docs = spark.read.parquet(in)
+    val quality = docs.select(col("doc_id"), col("text"), col("lang"),
+        graft.textstats.TextStatsExprs.qualityScorePpm(col("text"),
+          graft.text.Normalize.DefaultStops).as("quality_ppm"))
+      .filter(col("quality_ppm") >= 650000L)
+    val keepers = Dedup.exact(quality, "doc_id", "text")
+      .filter(col("keep")).select("doc_id")
+    val unique = quality.join(keepers, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("text"), col("lang"),
+        split(col("text"), " ").as("tokens"))
+      .persist() // within-stage reuse (LSH self-join sides + anti-joins)
+    val nearDropped = Dedup.minhashLshMd5(
+        unique.select(col("doc_id"), col("tokens")),
+        "doc_id", "tokens", k = 3, numHashes = 16, bands = 4)
+      .filter(col("est_jaccard") >= 0.5)
+      .select(col("key_b").as("doc_id")).distinct()
+    val surv = unique.join(nearDropped, Seq("doc_id"), "left_anti")
+    val bench = docs.filter(col("doc_id") % 97 === 0)
+      .select(split(col("text"), " ").as("tokens"))
+    val contam = Curation.contaminated(surv, bench, "doc_id", "tokens",
+      k = 4).select("doc_id")
+    Scale.resumableWrite(
+      surv.join(contam, Seq("doc_id"), "left_anti").select("doc_id", "text", "lang"),
+      s"$cleanDir/data", s"$cleanDir/manifest", nBuckets, waves, salts = 1,
+      keyCol = "doc_id", orderCol = "doc_id")
+    unique.unpersist()
     val clean = spark.read.parquet(s"$cleanDir/data")
 
     // ---- stage 2: mixture-sample the staged clean table, pack, and write
@@ -130,13 +120,6 @@ object CurationJob {
       TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets,
       waves = 1, salts = 1, keyCol = "doc_id", orderCol = "pack_id")
     counts.unpersist()
-    if (!Scale.hasBucketData(spark, TableIO.dataDir(table, snap)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        blocks.schema.add("bucket",
-          org.apache.spark.sql.types.IntegerType, nullable = false))
-        .repartition(1).write.mode("overwrite")
-        .parquet(TableIO.dataDir(table, snap))
     TableIO.publish(spark, table, snap)
     (snap, written)
   }

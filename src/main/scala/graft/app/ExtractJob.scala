@@ -54,35 +54,14 @@ object ExtractJob {
     * (published snapshot, rows written). */
   def run(spark: SparkSession, in: String, table: String, nBuckets: Int,
           salts: Int, cpus: Int, waves: Int = 1): (String, Long) = {
-    // resume the newest UNPUBLISHED staging snapshot (a previous failed
-    // attempt), else open a fresh one; publish flips the pointer only after
-    // every bucket is present, so readers never see a partial table.
-    // Resume is parameter-checked: the staging snapshot records (nBuckets,
-    // salts), and a retry with DIFFERENT parameters starts a fresh snapshot
-    // instead of skipping "done" bucket ids computed under the old
-    // bucketing — which would publish a silently incomplete table
-    // (round-2 ADVICE).
-    val params = s"nBuckets=$nBuckets\nsalts=$salts"
-    val current = TableIO.currentSnapshot(spark, table)
-    val snap = TableIO.snapshots(spark, table)
-      // NUMERIC compare (string compare of snap names misorders once the
-      // %05d format widens — round-3 review finding)
-      .filter(s => current.forall(c => TableIO.snapNum(c) < TableIO.snapNum(s)))
-      .lastOption
-      .filter(s => TableIO.readSidecar(spark, table, s, "params")
-        .contains(params))
-      .getOrElse(TableIO.nextSnapshotName(spark, table))
-    TableIO.writeSidecar(spark, table, snap, "params", params)
+    val snap = TableIO.stage(spark, table, s"nBuckets=$nBuckets\nsalts=$salts")
+    val manifest = s"$table/$snap/manifest"
+    val dataDir = TableIO.dataDir(table, snap)
     // NO upfront repartition: the kernel is per-turn embarrassingly
     // parallel and runs map-side inside the scan stage (size-balanced
     // splits), so the job's ONLY shuffle is the write's keyed repartition —
     // which is where conversation skew actually bites and where
     // resumableWrite's salted (bucket, turn_idx % salts) keying handles it.
-    // Round 4 removed a full-corpus salted shuffle that sat in front of the
-    // kernel doing nothing for a per-turn pipeline.
-    // (`Scale.saltedRepartition` remains the tool for per-CONVERSATION
-    // compute stages, where co-location with spread is the point.)
-    val turns = spark.read.parquet(in)
     // Observation (not a bare .observe name): the metrics are retrieved
     // after the write action and printed — the bare-name spelling computed
     // the aggregates on every row and silently discarded them (round-3
@@ -96,57 +75,29 @@ object ExtractJob {
     //    job, and obs.get would block forever) or sees only the re-written
     //    subset (round-4 review finding).
     // Both fall back to one aggregation over the written table.
-    val resumed = Scale.completedBuckets(spark, s"$table/$snap/manifest").nonEmpty
-    val pipeline = Extract.pipeline(turns)
+    val resumed = Scale.completedBuckets(spark, manifest).nonEmpty
+    val pipeline = Extract.pipeline(spark.read.parquet(in))
+    val turnsOut = count(lit(1)).as("turns_out")
+    val emptyTurns = sum(when(col("text") === "", 1).otherwise(0))
+    val charsOut = sum(length(col("text")))
     val obs =
       if (waves == 1 && !resumed)
         Some(org.apache.spark.sql.Observation("extract_metrics"))
       else None
     val extracted = obs.fold(pipeline)(o => pipeline.observe(o,
-      count(lit(1)).as("turns_out"),
-      sum(when(col("text") === "", 1).otherwise(0)).as("empty_turns"),
-      sum(length(col("text"))).as("chars_out")))
-    // waves is NOT in the params sidecar on purpose: it changes checkpoint
-    // granularity, never bucket identity, so a retry may resume the same
-    // staging snapshot at a different wave count safely.
-    val written = Scale.resumableWrite(extracted,
-      TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves,
-      salts)
-    // zero-row corpus: the bucketed write commits no partition dirs, and
-    // publishing a fileless data dir makes TableIO.readTable throw on
-    // schema inference forever after (the snapshotWrite path repairs this
-    // the same way — round-3/round-4 review findings). Write one
-    // schema-bearing empty parquet before publish.
-    // The placeholder's schema carries the `bucket` partition column a
-    // committed bucketed write exposes via its bucket= dirs — without it a
-    // zero-row snapshot's schema differs from every non-empty snapshot's,
-    // and a reader selecting `bucket` fails only on empty corpora
-    // (round-4 ADVICE).
-    if (!Scale.hasBucketData(spark, TableIO.dataDir(table, snap)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        extracted.schema.add("bucket",
-          org.apache.spark.sql.types.IntegerType, nullable = false))
-        .repartition(1).write.mode("overwrite")
-        .parquet(TableIO.dataDir(table, snap))
+      turnsOut, emptyTurns.as("empty_turns"), charsOut.as("chars_out")))
+    // waves is NOT in the params sidecar on purpose (see TableIO.stage).
+    val written = Scale.resumableWrite(extracted, dataDir, manifest, nBuckets,
+      waves, salts)
     // .filter(_.nonEmpty): a zero-row fresh run's keyed write launches zero
     // tasks, so the Observation completes with an EMPTY map (no metrics row
-    // ever accumulated) — fall through to the post-hoc aggregation, which
-    // handles the zero-row table explicitly (surfaced by the round-5
-    // zero-row schema test).
+    // ever accumulated). resumableWrite leaves the data dir readable even
+    // then, and the coalesced sums read 0 on a zero-row table.
     val m: Map[String, Any] = obs.map(_.get).filter(_.nonEmpty).getOrElse {
-      val dataDir = TableIO.dataDir(table, snap)
-      if (spark.read.parquet(dataDir).isEmpty) // zero-row corpus
-        Map("turns_out" -> 0L, "empty_turns" -> 0L, "chars_out" -> 0L)
-      else {
-        val r = spark.read.parquet(dataDir)
-          .agg(count(lit(1)).as("turns_out"),
-            sum(when(col("text") === "", 1).otherwise(0)).as("empty_turns"),
-            sum(length(col("text"))).as("chars_out"))
-          .collect()(0)
-        Map("turns_out" -> r.get(0), "empty_turns" -> r.get(1),
-          "chars_out" -> r.get(2))
-      }
+      val r = spark.read.parquet(dataDir).agg(turnsOut,
+        coalesce(emptyTurns, lit(0L)).as("empty_turns"),
+        coalesce(charsOut, lit(0L)).as("chars_out")).collect()(0)
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
     }
     System.err.println(s"[extract_metrics] turns_out=${m("turns_out")} " +
       s"empty_turns=${m("empty_turns")} chars_out=${m("chars_out")}")

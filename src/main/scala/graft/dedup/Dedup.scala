@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *    window sort, so partial aggregation applies;
   *  - MinHash/LSH never materializes the O(n²) pair space: docs shuffle once
   *    keyed by (band, band-signature) and only same-bucket pairs join;
-  *  - SimHash buckets on 16-bit sub-keys of the 64-bit signature (each
+  *  - SimHash buckets on 8-bit sub-keys of the 32-bit signature (each
   *    near-dup pair within Hamming distance r collides on ≥1 sub-key for
   *    r ≤ 3 by pigeonhole over 4 sub-keys);
   *  - embedding near-dup composes with [[graft.sim.Ann]]'s LSH bucketing.
@@ -106,7 +106,7 @@ object Dedup {
   // ------------------------------------------------------------ MinHash + LSH
 
   /** MinHash signature: numHashes values, hash_i(doc) = min over shingles of
-    * ((a_i * h + b_i) mod p), h = xxhash64(shingle) reduced mod p.
+    * ((a_i * h + b_i) mod p), h = a 32-bit md5 prefix of the shingle.
     * p = 2^31 − 1 (Mersenne prime) keeps every product < 2^62 — no overflow
     * under ANSI arithmetic. Pure column math: the signature is computed per
     * row, no shuffle. */
@@ -138,16 +138,10 @@ object Dedup {
   private def minhashFromHashes(hs: Column, numHashes: Int): Column =
     MinhashFoldExpr.minhashFold(hs, numHashes)
 
-  def minhashSignature(tokens: Column, k: Int, numHashes: Int): Column = {
-    val p = lit(MersenneP)
-    val sh = array_distinct(shingles(tokens, k))
-    minhashFromHashes(transform(sh, s => pmod(xxhash64(s), p)), numHashes)
-  }
-
-  /** md5-based MinHash variant: h = first 8 hex chars of md5(shingle) as a
-    * 32-bit int, reduced mod p. Slower than xxhash64 (no codegen'd digest)
-    * but portable across engines — used by the cross-engine oracle gate;
-    * the xxhash64 variant above is the production path. */
+  /** MinHash signature over md5: h = first 8 hex chars of md5(shingle) as
+    * a 32-bit int, reduced mod p. Portable across engines, so the DuckDB
+    * oracles replay it bit-for-bit (q29/q45/q58), and it is the one hash
+    * family every caller runs. */
   def minhashSignatureMd5(tokens: Column, k: Int, numHashes: Int): Column = {
     val p = lit(MersenneP)
     val sh = array_distinct(shingles(tokens, k))
@@ -156,10 +150,14 @@ object Dedup {
       numHashes)
   }
 
-  /** MinHash+LSH near-dup candidates: band the signature (bands × rowsPerBand
-    * = numHashes), bucket-join on (band_id, band_signature). One shuffle
-    * keyed by band bucket; same-bucket pairs only. Returns candidate pairs
-    * with their estimated Jaccard (fraction of matching signature slots).
+  /** MinHash+LSH near-dup candidates over [[minhashSignatureMd5]]: band
+    * the signature (bands × rowsPerBand = numHashes), bucket-join on
+    * (band_id, band_signature). One shuffle keyed by band bucket;
+    * same-bucket pairs only. Returns candidate pairs with their estimated
+    * Jaccard (fraction of matching signature slots). The md5 family lets
+    * the driver's DuckDB oracle replay the WHOLE candidate-generation path
+    * (banding + bucket join + slot-match estimate), not just the
+    * signatures.
     *
     * `maxBucket` caps bucket population: a bucket of b docs makes b²/2
     * candidate pairs, so one degenerate bucket (e.g. the empty-shingle
@@ -167,18 +165,6 @@ object Dedup {
     * larger than the cap are dropped from candidate generation — a standard,
     * documented recall trade (members of a giant bucket are near-identical
     * boilerplate and surface via exact dedup instead). 0 disables. */
-  def minhashLsh(df: DataFrame, key: String, tokens: String, k: Int = 3,
-                 numHashes: Int = 16, bands: Int = 4,
-                 maxBucket: Long = 0): DataFrame =
-    minhashLshFromSig(
-      df.select(col(key).as("k"),
-        minhashSignature(col(tokens), k, numHashes).as("sig")),
-      numHashes, bands, maxBucket)
-
-  /** md5-portable variant of [[minhashLsh]] — identical banding over the
-    * [[minhashSignatureMd5]] hash family, so the driver's DuckDB oracle can
-    * replay the WHOLE candidate-generation path (banding + bucket join +
-    * slot-match estimate), not just the signatures. */
   def minhashLshMd5(df: DataFrame, key: String, tokens: String, k: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
                     maxBucket: Long = 0): DataFrame =
@@ -245,14 +231,9 @@ object Dedup {
   private def simhashFromHashes(hs: Column, bits: Int): Column =
     SimhashFoldExpr.simhashFold(hs, bits)
 
-  /** 64-bit SimHash over the token array: per-bit majority vote of token
-    * xxhash64 values, columnar. Production path (fastest hash). */
-  def simhash(tokens: Column): Column =
-    simhashFromHashes(transform(tokens, t => xxhash64(t)), 64)
-
-  /** 32-bit SimHash over md5-derived token hashes — slower than xxhash64 but
-    * portable across engines, so the driver's DuckDB oracle can replay it
-    * bit-for-bit (same trick as [[minhashSignatureMd5]]). */
+  /** 32-bit SimHash: per-bit majority vote of md5-derived token hashes,
+    * columnar. Portable across engines, so the driver's DuckDB oracle can
+    * replay it bit-for-bit (same trick as [[minhashSignatureMd5]]). */
   def simhash32Md5(tokens: Column): Column =
     simhashFromHashes(
       transform(tokens, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long")),
@@ -266,8 +247,8 @@ object Dedup {
     * bands−1 differing bits cannot touch every sub-key), hence the require —
     * round 1 shipped maxHamming=16 over 4 bands, silently losing pairs at
     * distance 4..16. Callers wanting a wider radius must raise `bands`
-    * (narrower sub-keys ⇒ more candidate pairs: bands=8 over 64 bits ⇒ 8-bit
-    * keys ⇒ ~n²/256 candidates per band at scale — price the radius). */
+    * (narrower sub-keys ⇒ more candidate pairs: bands=8 over 32 bits ⇒ 4-bit
+    * keys ⇒ ~n²/16 candidates per band at scale — price the radius). */
   def simhashDupFromSig(sig: DataFrame, maxHamming: Int, bands: Int,
                         bits: Int): DataFrame = {
     require(maxHamming < bands,
@@ -290,14 +271,7 @@ object Dedup {
       .select("key_a", "key_b", "hamming")
   }
 
-  /** SimHash near-dup on 64-bit xxhash64 signatures (production path). */
-  def simhashDup(df: DataFrame, key: String, tokens: String,
-                 maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    simhashDupFromSig(
-      df.select(col(key).as("k"), simhash(col(tokens)).as("sh")),
-      maxHamming, bands, bits = 64)
-
-  /** SimHash near-dup on the 32-bit md5-portable signature (oracle path). */
+  /** SimHash near-dup on the 32-bit [[simhash32Md5]] signature (q39). */
   def simhashDupMd5(df: DataFrame, key: String, tokens: String,
                     maxHamming: Int = 3, bands: Int = 4): DataFrame =
     simhashDupFromSig(

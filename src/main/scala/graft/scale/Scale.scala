@@ -1,11 +1,12 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, salted
-  * repartition for skewed conversations, AQE config, and the checkpointed
+  * keyed writes for skewed conversations, AQE config, and the checkpointed
   * per-partition lineage manifest that makes a failed 10^12-turn run
   * resumable without recomputing completed buckets (north_rule).
   *
@@ -21,15 +22,6 @@ object Scale {
 
   def bucketCol(nBuckets: Int = DefaultBuckets, keyCol: String = "conv_id") =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int").as("bucket")
-
-  /** Salted repartition for skewed long conversations: per-turn stages are
-    * embarrassingly parallel, so rows of one huge conversation may be spread
-    * across `salts` partitions — `repartition(hash(conv_id, salt))` with
-    * salt = turn_idx mod salts. Downstream keyed writes re-group by bucket;
-    * stable ordering is restored by sorting on (conv_id, turn_idx) within
-    * the write, never assumed from partition order (SURVEY.md §1). */
-  def saltedRepartition(df: DataFrame, partitions: Int, salts: Int = 16): DataFrame =
-    df.repartition(partitions, col("conv_id"), pmod(col("turn_idx"), lit(salts)))
 
   /** Session defaults for the engine: AQE on (coalesce + skew-join), sane
     * local shuffle parallelism. */
@@ -54,52 +46,40 @@ object Scale {
 
   // ---------------------------------------------------------------- manifest
 
+  /** The one Hadoop `FileSystem` lookup for storage paths — java.io.File
+    * broke on S3/HDFS, the stated design point (round-1 verdict). */
+  private[graft] def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
+
+  /** The readability probe: true iff a visible `.parquet` file sits under
+    * `dir` (recursively, short-circuiting). Hidden entries (`_…`, `.…`) are
+    * the set Spark's file index skips and are never descended into, so a
+    * crashed append's `_temporary` reads as empty — schema inference over
+    * it would throw at the exact crash-recovery step the manifest exists
+    * for (round-3 review finding). */
+  private[graft] def hasData(spark: SparkSession, dir: String): Boolean = {
+    val (f, p) = fs(spark, dir)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def walk(d: Path): Boolean = f.listStatus(d).exists(st => visible(st) &&
+      (if (st.isDirectory) walk(st.getPath) else st.getPath.getName.endsWith(".parquet")))
+    f.exists(p) && walk(p)
+  }
+
   /** Per-partition lineage manifest: a tiny parquet table
     * (bucket int, rows long) recording finished output buckets. Idempotent
     * resume = read manifest, skip completed buckets, overwrite-by-partition
     * for the rest. Plain application logic, not planner surgery
-    * (SURVEY.md §4 conclusion). All path probing goes through the Hadoop
-    * FileSystem API — java.io.File broke on S3/HDFS, the stated design
-    * point (round-1 verdict). */
-  private def fsFor(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  /** True iff the dir holds at least one actual parquet data file. A
-    * listing check alone is NOT enough: a job that crashed mid manifest
-    * append leaves only a `_temporary` subdir, and schema inference over
-    * that throws — permanently bricking resume at the exact crash-recovery
-    * step the manifest exists for (round-3 review finding). Hidden entries
-    * (`_…`, `.…`) are the same set Spark's file index skips. */
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** True iff `path` holds at least one committed `bucket=` partition dir —
-    * the readability probe for bucket-partitioned output. (`hasDataFiles`
-    * checks top-level FILES and is blind to partition dirs; reading a dir
-    * with no committed partitions throws schema-inference errors.) */
-  def hasBucketData(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("bucket=")
-    }
-  }
-
+    * (SURVEY.md §4 conclusion). */
   def completedBuckets(spark: SparkSession, manifestDir: String): Set[Int] = {
-    if (!hasDataFiles(spark, manifestDir)) Set.empty
+    if (!hasData(spark, manifestDir)) Set.empty
     else spark.read.parquet(manifestDir)
       .select("bucket").distinct().collect().map(_.getInt(0)).toSet
   }
-
-  def recordBucket(spark: SparkSession, manifestDir: String, bucket: Int,
-                   rows: Long): Unit =
-    recordBuckets(spark, manifestDir, Seq(bucket -> rows))
 
   /** Record several completed buckets in ONE append job. */
   def recordBuckets(spark: SparkSession, manifestDir: String,
@@ -136,7 +116,13 @@ object Scale {
     * Iceberg table bucketed by conv_id, so each wave's bucket filter prunes
     * at the source and the rescan is ~free; on a flat parquet input each
     * wave re-reads the corpus (kernel work still runs once per row — the
-    * bucket filter sits below the projection), so keep waves modest (4–8). */
+    * bucket filter sits below the projection), so keep waves modest (4–8).
+    *
+    * Every dir it leaves is readable: when no wave committed a row (a
+    * zero-row input writes no partition dir), it writes one schema-bearing
+    * empty parquet — the input schema plus `bucket`, the column a committed
+    * bucketed write exposes through its `bucket=` dirs, so a zero-row
+    * table serves the same projections as any other. */
   def resumableWrite(df: DataFrame, outDir: String, manifestDir: String,
                      nBuckets: Int = DefaultBuckets, waves: Int = 1,
                      salts: Int = 1, keyCol: String = "conv_id",
@@ -183,7 +169,7 @@ object Scale {
         // throws a schema-inference error; and a bucket with zero rows must
         // still be manifested (rows=0) or every resume rescans it forever.
         val counts =
-          if (!hasBucketData(spark, outDir)) Map.empty[Int, Long]
+          if (!hasData(spark, outDir)) Map.empty[Int, Long]
           else spark.read.parquet(outDir)
             .filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
             .groupBy("bucket").count().collect()
@@ -192,6 +178,9 @@ object Scale {
           waveBuckets.map(b => b -> counts.getOrElse(b, 0L)))
       }
     }
+    if (!hasData(spark, outDir))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withBucket.schema)
+        .repartition(1).write.mode("overwrite").parquet(outDir)
     // total rows now present = manifest sum (metadata-sized read), ONE
     // record per bucket: the manifest is append-only, so a duplicate append
     // — a crashed run that died between its write-job commit and its

@@ -34,10 +34,7 @@ object TableIO {
   private val Pointer = "_CURRENT"
   private val FilesManifest = "files.list"
 
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  import Scale.fs
 
   /** Currently-published snapshot name, if any. */
   def currentSnapshot(spark: SparkSession, tableDir: String): Option[String] = {
@@ -50,8 +47,8 @@ object TableIO {
         val s = scala.io.Source.fromInputStream(in).mkString.trim
         // a half-written / corrupted pointer (anything but "snap-<digits>")
         // reads as ABSENT, not a crash in snapNum downstream: callers fall
-        // back to latestComplete (readers) or a fresh snapshot (ExtractJob
-        // resume) — the resume path is exactly where a torn pointer is
+        // back to latestComplete (readers) or a fresh snapshot (job resume
+        // in [[stage]]) — the resume path is exactly where a torn pointer is
         // plausible (round-3 ADVICE).
         if (s.startsWith("snap-") && s.stripPrefix("snap-").nonEmpty &&
             s.stripPrefix("snap-").forall(_.isDigit)) Some(s) else None
@@ -152,44 +149,34 @@ object TableIO {
 
   // ------------------------------------------------------------ lifecycle
 
-  /** Write `df` as the table's next snapshot and atomically publish it.
-    * Returns the new snapshot name. The data write happens into an
-    * unpublished directory; the table "commits" only at the pointer
-    * rename, so a failed write leaves the published table untouched
-    * (crash-safe, idempotent to retry). */
-  def snapshotWrite(df: DataFrame, tableDir: String,
-                    sortCols: Seq[String] = Seq("conv_id", "turn_idx")): String = {
-    val spark = df.sparkSession
-    val next = nextSnapshotName(spark, tableDir)
-    val sorted = if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(df(_)): _*) else df
-    val dd = dataDir(tableDir, next)
-    sorted.write.mode("overwrite").parquet(dd)
-    // a 0-partition frame writes only _SUCCESS, publishing a snapshot that
-    // readTable can never schema-infer (round-3 review finding). Repair
-    // AFTER the write by probing the output dir — probing the input plan
-    // (rdd.getNumPartitions) materializes every AQE shuffle stage, running
-    // a shuffled pipeline once for the probe and again for the write
-    // (round-3 ADVICE: doubled compute on the corpus-scale write API).
-    if (!hasDataFiles(spark, dd))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-        .repartition(1).write.mode("overwrite").parquet(dd)
-    publish(spark, tableDir, next)
-    next
-  }
-
-  /** Any .parquet data file under `dir` (recursive, short-circuits). */
-  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val (f, p) = fs(spark, dir)
-    f.exists(p) && {
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
-    }
+  /** Open the staging snapshot a job writes into and record its `params`
+    * sidecar; returns its name.
+    *
+    * Resume: the newest snapshot on disk is reused when it is newer than
+    * `_CURRENT` (so unpublished — a previous attempt died before
+    * [[publish]]) AND its `params` sidecar equals `params`; anything else
+    * opens [[nextSnapshotName]]. The job then writes through
+    * `Scale.resumableWrite` with manifests inside the snapshot dir, so a
+    * retry recomputes only the buckets the dead attempt did not commit.
+    *
+    * Params: `params` must name everything that decides bucket identity
+    * (e.g. the bucket count). A retry under different params starts fresh
+    * instead of skipping "done" buckets computed under the old bucketing,
+    * which would publish a silently incomplete table (round-2 ADVICE);
+    * settings that change only checkpoint granularity (waves) stay out, so
+    * a retry may change them and still resume.
+    *
+    * Publish: nothing under the snapshot is visible to readers until the
+    * job calls [[publish]] after its last write; a published snapshot is
+    * never resumed, so every run after a success opens a new one. */
+  def stage(spark: SparkSession, tableDir: String, params: String): String = {
+    val current = currentSnapshot(spark, tableDir).map(snapNum)
+    val snap = snapshots(spark, tableDir).lastOption
+      .filter(s => current.forall(_ < snapNum(s)))
+      .filter(s => readSidecar(spark, tableDir, s, "params").contains(params))
+      .getOrElse(nextSnapshotName(spark, tableDir))
+    writeSidecar(spark, tableDir, snap, "params", params)
+    snap
   }
 
   /** Publish `snap`: commit its file manifest, then atomically flip

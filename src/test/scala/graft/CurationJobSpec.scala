@@ -65,4 +65,21 @@ class CurationJobSpec extends AnyFunSuite {
     assert(graft.scale.Scale.completedBuckets(spark,
       s"$table/$snap/stage_clean/manifest").size === 8)
   }
+
+  test("a corpus with no stage-1 survivor publishes a readable empty block map, twice") {
+    val work = java.nio.file.Files.createTempDirectory("curation_job_empty").toString
+    spark.read.parquet(s"$srcDir/documents.parquet").filter(lit(false))
+      .write.parquet(s"$work/docs")
+    val table = s"$work/corpus_blocks"
+    Seq("snap-00001", "snap-00002").foreach { expected =>
+      val (snap, written) = CurationJob.run(spark, s"$work/docs", table,
+        nBuckets = 8, waves = 2)
+      assert(snap === expected)
+      assert(written === 0)
+      val published = graft.scale.TableIO.readTable(spark, table)
+      assert(published.columns.toSeq ===
+        Seq("pack_id", "doc_id", "start_tok", "end_tok", "bucket"))
+      assert(published.count() === 0)
+    }
+  }
 }

@@ -75,4 +75,24 @@ class RegistrySpec extends AnyFunSuite {
       assert(sameRows(rows(n, SparkEntry.queries(n)(s, dir)), cold(n)), n))
     finally SparkEntry.releaseShared(s)
   }
+
+  test("q76 re-stages its input when the documents fixture changes under the same path") {
+    // q76 keeps its staged transcript copy across calls; the copy is reused
+    // only while its stamp matches the sf dir AND the documents files' total
+    // size and newest mtime
+    val spark = SparkTestBase.spark
+    val sf = java.nio.file.Files.createTempDirectory("graft_q76_sf")
+    val docs = sf.resolve("documents.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"), docs)
+    val q76 = SparkEntry.queries("q76_streaming_extract")
+    val turns = () => graft.core.Transcripts.fromDocuments(spark, sf.toString).count()
+    assert(q76(spark, sf.toString).count() === turns())
+    val subset = sf.resolve("subset")
+    spark.read.parquet(docs.toString).orderBy("doc_id").limit(50)
+      .write.parquet(subset.toString)
+    java.nio.file.Files.delete(docs)
+    java.nio.file.Files.move(subset, docs)
+    assert(turns() === 50)
+    assert(q76(spark, sf.toString).count() === 50)
+  }
 }

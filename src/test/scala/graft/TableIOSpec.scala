@@ -1,6 +1,7 @@
 package graft
 
 import graft.scale.TableIO
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -12,16 +13,24 @@ class TableIOSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  /** A job's snapshot lifecycle: stage, write the data dir, publish. */
+  private def commit(df: DataFrame, dir: String): String = {
+    val snap = TableIO.stage(spark, dir, "")
+    df.write.parquet(TableIO.dataDir(dir, snap))
+    TableIO.publish(spark, dir, snap)
+    snap
+  }
+
   test("snapshot write + publish + read round-trip, then time travel") {
     val dir = Files.createTempDirectory("graft_table").toString
     val v1 = (0 until 10).map(i => ("c1", i, s"text$i")).toDF("conv_id", "turn_idx", "text")
-    val s1 = TableIO.snapshotWrite(v1, dir)
+    val s1 = commit(v1, dir)
     assert(s1 === "snap-00001")
     assert(TableIO.currentSnapshot(spark, dir) === Some("snap-00001"))
     assert(TableIO.readTable(spark, dir).count() === 10)
 
     val v2 = (0 until 25).map(i => ("c2", i, s"new$i")).toDF("conv_id", "turn_idx", "text")
-    val s2 = TableIO.snapshotWrite(v2, dir)
+    val s2 = commit(v2, dir)
     assert(s2 === "snap-00002")
     // published view is v2; v1 is still fully readable via time travel
     assert(TableIO.readTable(spark, dir).count() === 25)
@@ -30,13 +39,13 @@ class TableIOSpec extends AnyFunSuite {
 
   test("a reader holding the old snapshot is untouched by a publish") {
     val dir = Files.createTempDirectory("graft_table2").toString
-    TableIO.snapshotWrite(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
+    commit(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
     // reader resolves the pointer ONCE (what a query plan does at analysis)
     val pinned = TableIO.currentSnapshot(spark, dir).get
     val readerView = TableIO.readTable(spark, dir, Some(pinned))
     // writer publishes two more snapshots meanwhile
-    TableIO.snapshotWrite(Seq(("b", 0, "y"), ("b", 1, "z")).toDF("conv_id", "turn_idx", "text"), dir)
-    TableIO.snapshotWrite(Seq(("c", 0, "w")).toDF("conv_id", "turn_idx", "text"), dir)
+    commit(Seq(("b", 0, "y"), ("b", 1, "z")).toDF("conv_id", "turn_idx", "text"), dir)
+    commit(Seq(("c", 0, "w")).toDF("conv_id", "turn_idx", "text"), dir)
     // the pinned reader still sees exactly the old, complete data
     assert(readerView.select("conv_id").as[String].collect().toSeq === Seq("a"))
     assert(TableIO.readTable(spark, dir).select("conv_id").distinct()
@@ -45,7 +54,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("readers open exactly the manifest's files, never a dir listing") {
     val dir = Files.createTempDirectory("graft_table_mf").toString
-    val s1 = TableIO.snapshotWrite(
+    val s1 = commit(
       (0 until 5).map(i => ("a", i, s"t$i")).toDF("conv_id", "turn_idx", "text"), dir)
     val mf = TableIO.filesManifest(spark, dir, s1)
     assert(mf.isDefined && mf.get.nonEmpty, "publish must commit files.list")
@@ -60,8 +69,8 @@ class TableIOSpec extends AnyFunSuite {
 
   test("pointer loss falls back to the newest COMPLETE snapshot") {
     val dir = Files.createTempDirectory("graft_table_ptr").toString
-    TableIO.snapshotWrite(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
-    TableIO.snapshotWrite(Seq(("b", 0, "y")).toDF("conv_id", "turn_idx", "text"), dir)
+    commit(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
+    commit(Seq(("b", 0, "y")).toDF("conv_id", "turn_idx", "text"), dir)
     // a third snapshot's data lands but its manifest/pointer never commit
     Seq(("c", 0, "torn")).toDF("conv_id", "turn_idx", "text")
       .write.parquet(s"$dir/snap-00003/data")
@@ -73,14 +82,15 @@ class TableIOSpec extends AnyFunSuite {
 
   test("unpublished data is invisible; expire keeps the published snapshot") {
     val dir = Files.createTempDirectory("graft_table3").toString
-    val s1 = TableIO.snapshotWrite(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
+    val s1 = commit(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
     // simulate a failed job: data lands in a snapshot dir but is never published
     Seq(("junk", 9, "torn")).toDF("conv_id", "turn_idx", "text")
       .write.parquet(s"$dir/snap-00002/data")
     assert(TableIO.currentSnapshot(spark, dir) === Some(s1))
     assert(TableIO.readTable(spark, dir).count() === 1) // torn write invisible
-    // next snapshotWrite numbers PAST the orphan and publishes cleanly
-    val s3 = TableIO.snapshotWrite(Seq(("b", 0, "y")).toDF("conv_id", "turn_idx", "text"), dir)
+    // the orphan has no matching params sidecar, so the next stage numbers
+    // PAST it and publishes cleanly
+    val s3 = commit(Seq(("b", 0, "y")).toDF("conv_id", "turn_idx", "text"), dir)
     assert(s3 === "snap-00003")
     assert(TableIO.readTable(spark, dir).select("conv_id").as[String].head() === "b")
     TableIO.expireSnapshots(spark, dir, keep = 1)
